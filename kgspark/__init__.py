@@ -13,7 +13,6 @@ Pipeline stages (SURVEY.md §7.2):
     -> relations (pattern relation extraction -> raw triples)
     -> canonicalize (MinHash-LSH blocking + connected components + consensus)
     -> materialize  (partitioned entities/edges/lineage tables, resumable)
-    -> queries   (multi-hop / aggregate / top-k parity suite)
 
 Everything is DataFrame-native: no per-row Python, no driver-side
 accumulation; Python appears only in vectorized pandas/Arrow UDFs.

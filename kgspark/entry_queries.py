@@ -652,7 +652,7 @@ def events_hourly(spark, sf_dir):
 )
 def events_sessionize(spark, sf_dir):
     """Sessionization: gap-detection via lag + running flags (stateful-op
-    shape expressed as windows; streaming version in streaming.py)."""
+    shape expressed as windows)."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     flagged = ev.withColumn(
@@ -2083,8 +2083,8 @@ def ann_ivf_topk(spark, sf_dir):
     """IVF ANN (ops/simsearch.py): 8 seed centroids partition the corpus
     into inverted lists; each query probes its 2 nearest lists and exact-
     verifies inside them — the partitioned-index scale path next to banded
-    SRP (the Lloyd-trained variant is pytest-pinned; seeds here so the
-    DuckDB oracle replicates the centroids exactly)."""
+    SRP (lowest-id seed centroids, so the DuckDB oracle replicates them
+    exactly)."""
     emb = _spread(_t(spark, sf_dir, "embeddings"))
     cents = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")

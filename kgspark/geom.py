@@ -388,7 +388,7 @@ def wkb_intersection_area_py(wa: bytes, wb: bytes) -> float:
 
 
 # ---------------------------------------------------------------------------
-# encoders (fixtures/sinks/tests)
+# encoders (fixtures/tests)
 # ---------------------------------------------------------------------------
 
 

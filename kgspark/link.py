@@ -14,10 +14,10 @@ as relational plans:
    the same prefilter-then-verify shape as the reference's R-tree bbox probe
    (O1), done JVM-side with built-ins (no Python in the hot path).
 3. **score**: 0.5*name_sim + 0.3*context(admin region seen on page) +
-   0.2*match prior; **top-1 per (url, surface)** via a row_number window with
-   a total order (score desc, name_sim desc, entity_id asc) so results are
-   identical at any parallelism (determinism precondition for the scaling
-   bench, SURVEY.md §7.4.4).
+   0.2*match prior; **top-1 per (url, surface)** via a min-of-struct
+   aggregate with a total order (score desc, name_sim desc, entity_id asc)
+   so results are identical at any parallelism (determinism precondition
+   for the scaling bench, SURVEY.md §7.4.4).
 4. **routing**: high-confidence vs ambiguous, mirroring the reference's
    confidence split (link_csd_years_spatial_v2.py:252-260).
 

@@ -93,12 +93,3 @@ def melt_observations(
         out = out.join(F.broadcast(variable_meta), "variable", "left")
     return out
 
-
-def observation_ids(obs: DataFrame, id_col: str, snapshot_col: str | None = None) -> DataFrame:
-    """Deterministic measurement ids MEAS_{id}_{snapshot}_{variable}
-    (reference build_census_observations_v2.py:147)."""
-    parts = [F.lit("MEAS"), F.col(id_col).cast("string")]
-    if snapshot_col:
-        parts.append(F.col(snapshot_col).cast("string"))
-    parts.append(F.col("variable"))
-    return obs.withColumn("measurement_id", F.concat_ws("_", *parts))

@@ -6,7 +6,7 @@ covers most hot-key groupBys — but two shapes still need explicit salt at
 skew"):
 
 1. **High-cardinality agg states on hot keys**: `collect_list`/`collect_set`
-   per entity (evidence merging) puts every row of a head entity in ONE
+   per entity (e.g. per-entity evidence lists) puts every row of a head entity in ONE
    task's state. `salted_agg` splits each key into `n_salts` subkeys,
    aggregates partials, then merges — the classic two-phase salt.
 2. **Replicated broadcast-side joins** where the probe side is hot and the
@@ -20,8 +20,6 @@ corpus (the SURVEY §5.6 scale/skew test).
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -76,19 +74,3 @@ def salted_agg(
     )
     return partial.groupBy(*key_cols).agg(*merge_aggs)
 
-
-def salted_repartition(df: DataFrame, key_cols: list[str], n_salts: int = 16,
-                       identity_cols: list[str] | None = None,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Repartition by (key, salt) so a hot key spreads over n_salts
-    partitions — the pre-shuffle for downstream per-partition work
-    (applyInPandas evidence merging, heavy verify UDFs)."""
-    ident = identity_cols or df.columns
-    salted = df.withColumn("_salt", salt_column(n_salts, *ident))
-    cols = [F.col(c) for c in key_cols] + [F.col("_salt")]
-    out = (
-        salted.repartition(num_partitions, *cols)
-        if num_partitions
-        else salted.repartition(*cols)
-    )
-    return out.drop("_salt")

@@ -50,20 +50,24 @@ def _ngrams(toks, n: int):
     shorter side with nulls, concat propagates them, and tokens are never
     null (split output), so exactly the trailing position is null —
     array_compact removes precisely it, which also yields the empty array
-    for 1-token docs. Exploded bigram stream 2.5 -> 1.7 s on the 10x
-    bench corpus; equality with the transform spec pinned by
-    tests/test_ops.py. For n >= 3 a chained zip would concatenate
+    for 1-token docs. A null token array (null text) would make the whole
+    zip_with null, so it is guarded to the empty array like n >= 3.
+    Exploded bigram stream 2.5 -> 1.7 s on the 10x bench corpus; equality
+    with the transform spec pinned by tests/test_ops.py. For n >= 3 a chained zip would concatenate
     incrementally (O(n^2) intermediate string bytes per n-gram — measured
     ~30% SLOWER on 5-gram shingles), so those stay on the transform
     form."""
     if n == 2:
-        return F.array_compact(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        )
+        return F.when(
+            toks.isNotNull(),
+            F.array_compact(
+                F.zip_with(
+                    toks,
+                    F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
+                    lambda a, b: F.concat(a, F.lit(" "), b),
+                )
+            ),
+        ).otherwise(F.array().cast("array<string>"))
 
     def join_at(i):
         return F.array_join(F.slice(toks, i + 1, n), " ")

@@ -40,15 +40,19 @@ def run_pipeline(
     pages: DataFrame,
     alias_index: DataFrame,
     checkpoint_dir: str | None = None,
-    extract_html: bool = True,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames."""
     reg = CheckpointRegistry(spark, checkpoint_dir) if checkpoint_dir else None
 
     # Stages consumed by 2+ downstream stages: break recomputation with a
-    # lazy localCheckpoint. Single-consumer stages stay fully lazy so
-    # Catalyst fuses them into their consumer (fewer jobs — job-launch
-    # latency is the serial floor of the pipeline at small scale).
+    # localCheckpoint(eager=False). Under AQE that checkpoint is not lazy:
+    # planning it runs every shuffle stage below it right away, so these
+    # stages execute one after another while run_pipeline() builds the
+    # plan, before the caller's first action (41 of the 64 jobs of a
+    # 6k-page local[4] run on a 4-vCPU host, Spark 4.1.2). Single-consumer
+    # stages stay fully lazy so Catalyst fuses them into their consumer
+    # (fewer jobs — job-launch latency is the serial floor of the pipeline
+    # at small scale).
     _SHARED = {"annotated", "links", "surfaces", "surface_entity", "components"}
 
     def ck(name: str, make, partition_by=None) -> DataFrame:
@@ -59,11 +63,8 @@ def run_pipeline(
 
     gaz, regions = gazetteer_from_alias_index(alias_index)
 
-    extracted = ck(
-        "extracted",
-        lambda: (with_extracted_text(pages.drop("text")) if extract_html else pages),
-    )
-    if reg is None and extract_html:
+    extracted = ck("extracted", lambda: with_extracted_text(pages.drop("text")))
+    if reg is None:
         # no checkpoint boundary between extract and annotate: fuse the
         # frozen extractor into the annotation pass so the 13KB-per-page
         # text never crosses the JVM<->Python boundary twice (guide §4.1).

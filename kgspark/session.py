@@ -83,9 +83,13 @@ def get_spark(
 def unpersist_all(spark: SparkSession) -> int:
     """Drop every persisted RDD/DataFrame (incl. localCheckpoint storage).
 
-    run_pipeline localCheckpoints each stage; in a long-lived session
-    (benchmark loops, notebooks) those persist until dropped and eventually
-    GC-thrash the JVM. Call between independent pipeline runs."""
+    Without a checkpoint dir, run_pipeline localCheckpoints the stages
+    that two or more later stages read. Under AQE those checkpoints run
+    their jobs while run_pipeline() builds the plan, not at the caller's
+    first action, so their blocks are already stored when it returns. In
+    a long-lived session (benchmark loops, notebooks) they persist until
+    dropped and eventually GC-thrash the JVM. Call between independent
+    pipeline runs."""
     spark.catalog.clearCache()
     jrdds = spark.sparkContext._jsc.getPersistentRDDs()
     rdds = list(jrdds.values())

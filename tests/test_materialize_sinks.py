@@ -1,63 +1,8 @@
-"""Sinks (Neo4j bulk CSV, Turtle), appellations, observations melt."""
+"""Observations melt (wide census-style tables -> long observation rows)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from kgspark import appellations, fixtures, observations, sinks
-from kgspark.pipeline import run_pipeline
-
-
-def test_neo4j_bulk_and_turtle_roundtrip(tmp_path, spark):
-    out = run_pipeline(spark, fixtures.gen_pages(spark, 80), fixtures.gen_alias_index(spark))
-    entities, edges = out["entities"], out["edges"]
-
-    d = str(tmp_path / "neo4j")
-    sinks.write_neo4j_bulk(entities, edges, d)
-    nodes = spark.read.option("header", True).csv(f"{d}/nodes")
-    assert "entity_id:ID" in nodes.columns and ":LABEL" in nodes.columns
-    rels = spark.read.option("header", True).csv(f"{d}/rels")
-    assert {":START_ID", ":END_ID", ":TYPE"} <= set(rels.columns)
-    assert rels.count() == edges.count()
-
-    t = str(tmp_path / "ttl")
-    sinks.write_turtle(spark, entities, edges, t)
-    lines = spark.read.text(f"{t}/triples")
-    assert lines.count() == entities.count() + edges.count()
-    bad = lines.where(~F.col("value").endswith(" .")).count()
-    assert bad == 0
-
-
-def test_turtle_quote_escaping(spark):
-    # Java replaceAll replacement rules make naive '\"' a no-op; valid
-    # Turtle requires embedded quotes emitted as \" and backslashes as \\.
-    ents = spark.createDataFrame(
-        [("E1", 'John "Johnny" Macdonald'), ("E2", "back\\slash")],
-        "entity_id string, canonical_name string",
-    )
-    lines = {r[0] for r in sinks.turtle_entity_lines(ents).collect()}
-    assert 'kg:E1 rdfs:label "John \\"Johnny\\" Macdonald" .' in lines
-    assert 'kg:E2 rdfs:label "back\\\\slash" .' in lines
-
-
-def test_turtle_literal_inference(spark):
-    df = spark.createDataFrame([("42",), ("3.14",), ("abc",)], "v string")
-    got = [r[0] for r in df.select(sinks.turtle_literal("v")).collect()]
-    assert got == ['42^^xsd:integer', '3.14^^xsd:decimal', '"abc"']
-
-
-def test_appellations_and_ambiguous(spark):
-    out = run_pipeline(spark, fixtures.gen_pages(spark, 150), fixtures.gen_alias_index(spark))
-    app = appellations.build_appellations(out["canonical_map"], out["resolved_surfaces"])
-    rows = app.collect()
-    assert len(rows) > 0
-    # canonical rows only where the rename gate passed
-    assert all(r["reason"] in ("unanimous", "ocr_variants", "name_change") for r in rows)
-    edges = appellations.appellation_edges(app)
-    assert edges.where(~F.col("pred").isin(["has_appellation", "has_variant_appellation"])).count() == 0
-    amb = appellations.ambiguous_links(out["links"])
-    assert set(amb.columns) == {"url", "surface", "entity_id", "canonical_name",
-                                "name_sim", "ctx_score", "score"}
+from kgspark import observations
 
 
 def test_melt_observations(spark):
@@ -91,5 +36,3 @@ def test_melt_observations_semi_join_and_meta(spark):
     rows = obs.collect()
     assert {r["place_id"] for r in rows} == {1, 3}
     assert all(r["category"] == "Demography" for r in rows)
-    with_ids = observations.observation_ids(obs, "place_id").collect()
-    assert all(r["measurement_id"].startswith("MEAS_") for r in with_ids)

@@ -68,7 +68,9 @@ PIN_EXTRA = int(os.environ.get("BENCH_PIN_EXTRA", "1"))
 def pin_cpus(n_threads: int) -> list[int]:
     """Pin this process (and all future children: JVM, pyspark workers) to
     n_threads + PIN_EXTRA dedicated vCPUs. BENCH_PIN=off disables;
-    BENCH_PIN=a,b,c pins to an explicit list."""
+    BENCH_PIN=a,b,c pins to an explicit list. Exits with the allowed set
+    when the requested vCPUs are not all in this process's affinity mask
+    (sched_setaffinity would only say EINVAL)."""
     spec = os.environ.get("BENCH_PIN", "auto")
     if spec == "off":
         return []
@@ -76,6 +78,16 @@ def pin_cpus(n_threads: int) -> list[int]:
         cpus = list(range(PIN_BASE, PIN_BASE + n_threads + PIN_EXTRA))
     else:
         cpus = [int(c) for c in spec.split(",")]
+    allowed = sorted(os.sched_getaffinity(0))
+    missing = sorted(set(cpus) - set(allowed))
+    if missing:
+        sys.exit(
+            f"bench_scaling_child: cannot pin to vCPUs {cpus}: {missing} are not "
+            f"in this host's allowed set {allowed}. BENCH_PIN=auto pins "
+            f"{n_threads} + BENCH_PIN_EXTRA ({PIN_EXTRA}) vCPUs from "
+            f"BENCH_PIN_BASE ({PIN_BASE}); lower BENCH_PIN_BASE, name vCPUs "
+            f"with BENCH_PIN=a,b,c, or set BENCH_PIN=off."
+        )
     os.sched_setaffinity(0, cpus)
     return cpus
 
