@@ -252,6 +252,35 @@ def lsh_banded_topk(
     )
 
 
+def embedding_dup_pairs_banded(
+    vectors: DataFrame,
+    threshold: float = 0.95,
+    n_bits: int = 16,
+    band_bits: int = 4,
+    nnz: int = 8,
+    dim: int = 64,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Near-duplicate pairs via banded-SRP self-join — the scale-safe
+    replacement for the 16-bucket embedding_dup_pairs: per-band buckets
+    bound the self-join fan-out, multiple bands keep recall."""
+    planes = srp_hyperplanes(n_bits, dim, nnz, seed)
+    idx = _banded_candidates(vectors, planes, band_bits, id_col, vec_col)
+    a = idx.select(F.col(id_col).alias("a"), "band", "bucket")
+    b = idx.select(F.col(id_col).alias("b"), "band", "bucket")
+    pairs = a.join(b, ["band", "bucket"]).where(F.col("a") < F.col("b")).select("a", "b").distinct()
+    va = vectors.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
+    vb_ = vectors.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    return (
+        pairs.join(va, "a")
+        .join(vb_, "b")
+        .select("a", "b", _e6(cosine(F.col("va"), F.col("vb"))).alias("cosine_sim_e6"))
+        .where(F.col("cosine_sim_e6") >= int(threshold * 1000000))
+    )
+
+
 def embedding_dup_pairs(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -287,9 +316,10 @@ def embedding_dup_pairs(
 # SRP when they don't).
 #
 # Determinism: seeding takes the n_centroids lowest-id vectors (the
-# SQL-replicable degenerate of k-means++ sampling) and assignment has fixed
-# tie-breaks — same input, same lists, at any parallelism. nprobe = K
-# degenerates to exact brute force (test-pinned).
+# SQL-replicable degenerate of k-means++ sampling), and the Lloyd trainer
+# runs a FIXED iteration count with fixed tie-breaks — same input, same
+# centroids, at any parallelism. nprobe = K degenerates to exact brute
+# force (test-pinned).
 # ---------------------------------------------------------------------------
 
 
@@ -368,3 +398,49 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
         .where(F.col("rank") <= k)
     )
 
+
+def ivf_train_centroids(vectors: DataFrame, n_centroids: int = 8, n_iters: int = 3,
+                        id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Lloyd-refined coarse centroids, pure DataFrame ops (no MLlib, no
+    driver-side vectors): assign (broadcast argmax) -> per-dimension mean
+    via posexplode + groupBy -> arrays rebuilt with array_sort/transform.
+    Deterministic: seeded from the lowest-id vectors, FIXED iteration
+    count, tie-free assignment; empty clusters keep their previous
+    centroid. The per-dimension mean sums per-row DECIMAL casts, not
+    doubles: double addition is accumulation-order dependent and shuffle
+    fetch order varies across runs/parallelism, so a double F.avg could
+    flip centroid bits (and downstream e6 assignments) between local[1]
+    and local[32]; decimal sums are exact, hence order-independent
+    (round-4 advice). Each iteration is one shuffle over (centroid, dim)
+    rows — at 10^9 vectors train on a sampled fraction, exactly like
+    FAISS."""
+    cents = ivf_seed_centroids(vectors, n_centroids, id_col, vec_col).localCheckpoint()
+    for _ in range(n_iters):
+        assign = ivf_assign(vectors, cents, id_col, vec_col)
+        means = (
+            vectors.join(assign, id_col)
+            .select("centroid_id", F.posexplode(F.col(vec_col)).alias("pos", "v"))
+            .groupBy("centroid_id", "pos")
+            .agg(
+                (
+                    F.sum(F.col("v").cast("double").cast("decimal(27,9)"))
+                    / F.count(F.lit(1))
+                ).alias("m")
+            )
+            .groupBy("centroid_id")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s["m"].cast("float"),
+                ).alias("new_vec")
+            )
+        )
+        cents = (
+            cents.join(means, "centroid_id", "left")
+            .select(
+                "centroid_id",
+                F.coalesce(F.col("new_vec"), F.col("centroid_vec")).alias("centroid_vec"),
+            )
+            .localCheckpoint()  # cut the iteration lineage (tiny frame)
+        )
+    return cents

@@ -74,3 +74,19 @@ def salted_agg(
     )
     return partial.groupBy(*key_cols).agg(*merge_aggs)
 
+
+def salted_repartition(df: DataFrame, key_cols: list[str], n_salts: int = 16,
+                       identity_cols: list[str] | None = None,
+                       num_partitions: int | None = None) -> DataFrame:
+    """Repartition by (key, salt) so a hot key spreads over n_salts
+    partitions — the pre-shuffle for downstream per-partition work
+    (applyInPandas per-entity work, heavy verify UDFs)."""
+    ident = identity_cols or df.columns
+    salted = df.withColumn("_salt", salt_column(n_salts, *ident))
+    cols = [F.col(c) for c in key_cols] + [F.col("_salt")]
+    out = (
+        salted.repartition(num_partitions, *cols)
+        if num_partitions
+        else salted.repartition(*cols)
+    )
+    return out.drop("_salt")

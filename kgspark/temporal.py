@@ -5,7 +5,7 @@ each entity's name chain chronologically (assign_canonical_names.py:96-158),
 then serves "how did X change over time" queries
 (query_test_results.log:12-20). The webtext analog snapshots by crawl year
 (`year(warc_ts)`): per-entity per-year mention profiles, lag/lead chains
-over the years, and a name-change flag where the dominant surface form of
+over the years, and name-change events where the dominant surface form of
 an entity flips between snapshots.
 
 Scale notes:
@@ -68,3 +68,14 @@ def entity_timeline(snapshots: DataFrame) -> DataFrame:
         & (F.col("prev_surface") != F.col("top_surface")),
     )
 
+
+def name_change_events(timeline: DataFrame) -> DataFrame:
+    """(entity_id, from_year, to_year, from_surface, to_surface) rows — the
+    reference's name-change chain entries (assign_canonical_names.py:96-158)."""
+    return timeline.where(F.col("name_changed")).select(
+        "entity_id",
+        F.col("prev_year").alias("from_year"),
+        F.col("snapshot_year").alias("to_year"),
+        F.col("prev_surface").alias("from_surface"),
+        F.col("top_surface").alias("to_surface"),
+    )

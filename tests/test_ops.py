@@ -224,6 +224,29 @@ def test_banded_more_bands_higher_recall(spark):
     assert recall(24, 4) >= recall(8, 4) - 1e-9  # 6 bands >= 2 bands
 
 
+def test_banded_dup_pairs_superset_recall(spark):
+    """Every >=0.99-cosine pair that brute force finds must be found by the
+    banded self-join at these parameters on the fixture (high-sim pairs
+    collide in some band with overwhelming probability)."""
+    emb = _testdata_embeddings(spark).limit(200)
+    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    brute = (
+        a.crossJoin(b)
+        .where(F.col("a") < F.col("b"))
+        .select("a", "b", simsearch._e6(simsearch.cosine(F.col("va"), F.col("vb"))).alias("c"))
+        .where(F.col("c") >= 990000)
+    )
+    want = {(r["a"], r["b"]) for r in brute.collect()}
+    got = {
+        (r["a"], r["b"])
+        for r in simsearch.embedding_dup_pairs_banded(
+            emb, threshold=0.99, n_bits=16, band_bits=4
+        ).collect()
+    }
+    assert want <= got
+
+
 def test_multimodal_decode_plumbing(spark):
     media = multimodal.gen_media_fixture(spark, 30)
     decoded = multimodal.decode_images(media.where("kind = 'image'"))
@@ -253,6 +276,15 @@ def test_image_header_parse_formats():
     assert multimodal.parse_image_header(b"not an image at all, promise") is None
     assert multimodal.decode_image_header(None) == (0, 0, 0, 0.0, False, "none")
     assert multimodal.decode_image_header(b"\xff\xd8 truncated")[4] is False
+
+
+def test_multimodal_frame_sampling(spark):
+    media = multimodal.gen_media_fixture(spark, 30)
+    frames = multimodal.sample_frames(media.where("kind = 'video'"), every_n_seconds=1.0)
+    pdf = frames.toPandas()
+    assert len(pdf) > 0
+    per = pdf.groupby("media_id").size()
+    assert (per >= 2).all()  # durations are 2-6s
 
 
 def test_jpeg_fill_bytes_and_sos():
@@ -378,6 +410,26 @@ def test_ivf_partial_probe_recall(spark):
     assert recall4 >= recall - 1e-9, (recall, recall4)
 
 
+def test_ivf_lloyd_trainer_deterministic(spark):
+    """The DataFrame-ops Lloyd trainer returns one centroid row per
+    cluster, full-width vectors, and is bit-deterministic across runs."""
+    emb = _testdata_embeddings(spark)
+    a = simsearch.ivf_train_centroids(emb, n_centroids=4, n_iters=2)
+    b = simsearch.ivf_train_centroids(emb, n_centroids=4, n_iters=2)
+    rows_a = {r["centroid_id"]: list(r["centroid_vec"]) for r in a.collect()}
+    rows_b = {r["centroid_id"]: list(r["centroid_vec"]) for r in b.collect()}
+    assert rows_a == rows_b
+    assert len(rows_a) == 4
+    dim = len(emb.first()["embedding"])
+    assert all(len(v) == dim for v in rows_a.values())
+    # refined centroids still drive a working index end-to-end
+    q = emb.where("vec_id < 3").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    out = simsearch.ivf_topk(emb, q, a, k=3, nprobe=2).collect()
+    assert len(out) == 9  # 3 queries x top-3, rank complete
+
+
 def test_minhash_blank_text_no_pair_explosion(spark):
     """Whitespace-only docs collapse to ONE signature in both hash paths
     (every md5 shingle is ""; every xxhash64 window is a seed constant),
@@ -430,6 +482,61 @@ def test_png_decompression_bomb_bounded():
     px = np.full((2, 2, 3), 7, np.uint8)
     good = multimodal.make_png_bytes(2, 2, px)
     assert multimodal.decode_png_pixels(good) is not None
+
+
+def test_ivf_lloyd_trainer_parallelism_invariant(spark):
+    """Centroid bits must not depend on partitioning: a double F.avg is
+    accumulation-order dependent (shuffle fetch order varies with
+    parallelism), so the per-dimension mean sums exact DECIMAL casts
+    (round-4 advice). One-partition and 32-partition inputs must train
+    IDENTICAL centroids, bit for bit."""
+    emb = _testdata_embeddings(spark)
+    a = simsearch.ivf_train_centroids(emb.coalesce(1), n_centroids=4, n_iters=2)
+    b = simsearch.ivf_train_centroids(emb.repartition(32), n_centroids=4, n_iters=2)
+    rows_a = {r["centroid_id"]: list(r["centroid_vec"]) for r in a.collect()}
+    rows_b = {r["centroid_id"]: list(r["centroid_vec"]) for r in b.collect()}
+    assert rows_a == rows_b
+
+
+def test_ivf_lloyd_recall_on_clustered_fixture(spark):
+    """Round-4 verdict #7: the Lloyd trainer must produce centroids that
+    make partial probing actually work on clusterable data. 8 separated
+    clusters in 16-d; after training (K=8), probing nprobe=2 of 8 lists
+    must keep recall@5 >= 0.9 (on cluster-structured data the true
+    neighbors share the query's list, so a trainer that failed to find
+    the cluster structure — e.g. collapsed or stuck seeds — would tank
+    this). The near-random testdata fixture can't show this; it is the
+    hardest regime for coarse quantization (see
+    test_ivf_partial_probe_recall's 0.25 bound)."""
+    import random
+
+    rng = random.Random(42)
+    dim, per = 16, 40
+    rows = []
+    for c in range(8):
+        center = [10.0 if d % 8 == c else 0.0 for d in range(dim)]
+        for i in range(per):
+            rows.append(
+                (
+                    c * per + i,
+                    [v + rng.uniform(-0.5, 0.5) for v in center],
+                )
+            )
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = simsearch.ivf_train_centroids(emb, n_centroids=8, n_iters=3)
+    q = emb.where(F.col("vec_id") % 40 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    truth = {
+        (r["query_id"], r["vec_id"])
+        for r in simsearch.brute_force_topk(emb, q, k=5).collect()
+    }
+    got = {
+        (r["query_id"], r["vec_id"])
+        for r in simsearch.ivf_topk(emb, q, cents, k=5, nprobe=2).collect()
+    }
+    recall = len(truth & got) / len(truth)
+    assert recall >= 0.9, recall
 
 
 def test_span_dedup_pinned(spark):

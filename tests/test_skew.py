@@ -64,6 +64,19 @@ def test_salt_deterministic(spark):
     assert salts == set(range(16))  # uniform-ish coverage
 
 
+def test_salted_repartition_spreads_hot_key(spark):
+    df = _skewed(spark)
+    parts = (
+        skew.salted_repartition(df, ["entity"], n_salts=8, identity_cols=["row_id"],
+                                num_partitions=8)
+        .where(F.col("entity") == "canada")
+        .select(F.spark_partition_id().alias("pid"))
+        .distinct()
+        .count()
+    )
+    assert parts >= 4  # head key spread over several partitions, not one
+
+
 def test_pipeline_head_entity_output_matches_golden(spark):
     """End-to-end skew check: the 35%-head-entity fixture corpus still
     yields exact P/R (salting/partial-agg never changes results)."""

@@ -1,4 +1,4 @@
-"""Temporal snapshots: per-year profiles, lag chains, name-change flags."""
+"""Temporal snapshots: per-year profiles, lag chains, name-change events."""
 
 from __future__ import annotations
 
@@ -65,6 +65,17 @@ def test_timeline_chain_order_and_lag(spark):
     # E2 skips 1999: the chain links 1998 -> 2000 directly (lag over
     # existing snapshots, like the reference's year chains)
     assert rows[("E2", 2000)]["prev_year"] == 1998
+
+
+def test_name_change_events(spark):
+    pages, links = _fixture(spark)
+    ev = temporal.name_change_events(
+        temporal.entity_timeline(temporal.entity_snapshots(links, pages))
+    ).collect()
+    assert len(ev) == 1
+    e = ev[0]
+    assert (e["entity_id"], e["from_year"], e["to_year"]) == ("E1", 1999, 2000)
+    assert (e["from_surface"], e["to_surface"]) == ("Bytown", "Ottawa")
 
 
 def test_pipeline_emits_temporal_stages(spark):
