@@ -15,13 +15,15 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
    link_csd_years_spatial_v2.py:135-165 shape: block -> exact verify ->
    threshold classify). Surfaces that linked to the same entity id are
    SAME_AS by construction (the reference's SAME_AS/iou>=0.999 chains).
-3. **Connected components**: iterative min-label propagation as DataFrame
-   self-joins with `localCheckpoint()` per frontier (cuts lineage — the
-   north rule's "checkpointed frontiers") and convergence detection
-   (reference cycle guard -> `changed == 0`). Head-entity skew ("Canada" on
-   35% of pages) never reaches this loop at page-cardinality: CC runs over
-   *distinct surfaces*, and the label-propagation aggregate is a min() —
-   partial (map-side) aggregation flattens residual key skew; AQE skew-join
+3. **Connected components** over *distinct surfaces* (vocabulary-bounded,
+   never page-cardinality): a graph of up to SMALL_GRAPH_ROWS node and
+   edge rows is solved in one task, a single-group grouped-map union-find
+   (one counting action, then one exchange). Larger graphs (corpus-scale near-dup
+   clustering) run iterative min-label propagation as DataFrame
+   self-joins with `localCheckpoint()` per frontier (the north rule's
+   "checkpointed frontiers") and convergence detection (reference cycle
+   guard -> `changed == 0`); its label aggregate is a min(), so partial
+   (map-side) aggregation flattens head-entity key skew and AQE skew-join
    handles the join side.
 4. **Consensus canonical form**: occurrence-weighted mode per component
    (reference A4) gated by avg/min similarity >= 70/60 (reference
@@ -31,8 +33,9 @@ assign_canonical_names_simple.py:94-124) as distributed primitives:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .link import normalize_surface  # noqa: F401  (re-exported for callers)
 
@@ -45,6 +48,11 @@ JACCARD_SAMEAS = 0.5
 LEV_RATIO_SAMEAS = 0.7  # reference OCR-variant band is sim 60-95 (fix_ocr_errors.py:183-187)
 AVG_SIM_GATE = 70.0
 MIN_SIM_GATE = 60.0
+# Largest graph (node rows + symmetric edge rows) connected_components
+# solves in one task; above it the distributed label propagation runs.
+# At the bound (500k string nodes, 750k random edges) the union-find took
+# 11.5 s and 280 MB in one Python worker (4-vCPU Xeon host).
+SMALL_GRAPH_ROWS = 2_000_000
 
 
 def _shingles(col: str, n: int = 3):
@@ -155,123 +163,176 @@ def same_as_edges(
     return lsh.unionByName(via_entity).distinct()
 
 
+def _min_root_components(table):
+    """Grouped-map body of the one-task CC path (pyarrow Table -> Table).
+
+    Rows with a null ``dst`` are the nodes; the rest are symmetric edges
+    with both endpoints non-null. Union-find with path compression links
+    the larger root under the smaller, so every root is the minimum node
+    of its component (Python orders str by code point, the order Spark's
+    UTF-8 binary comparison gives). Edges with an endpoint outside the
+    nodes are skipped; a null node comes out as (None, None)."""
+    import pyarrow as pa
+
+    src = table.column("src").to_pylist()
+    dst = table.column("dst").to_pylist()
+    parent = {s: s for s, d in zip(src, dst) if d is None and s is not None}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(src, dst):
+        if b is not None and a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    comps = [find(n) for n in nodes]
+    if None in src:  # edge rows never carry a null src
+        nodes.append(None)
+        comps.append(None)
+    t = table.column("src").type
+    return pa.table(
+        {"node": pa.array(nodes, type=t), "component": pa.array(comps, type=t)}
+    )
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "node",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Min-label propagation CC: iterative DataFrame self-join with
-    checkpointed frontiers (north rule). nodes: (node); edges: (a, b).
+    """Connected components. nodes: (node); edges: (a, b).
 
     Returns (node, component) where component = min node id in component.
-    Convergence = no label changed (reference cycle-guard analog,
-    assign_canonical_names.py:146-151).
+    Edges with an endpoint outside ``nodes`` are ignored, self-loops are
+    no-ops, and a null node comes out as (None, None). Node types: string
+    or integral.
 
-    The frontier is sized adaptively: iteration jobs run over
-    ~max(1, n_edges/500k) partitions, so small graphs (distinct mention
-    surfaces are vocabulary-bounded) pay single-task job latency instead of
-    full-width shuffles, while billion-edge graphs get full parallelism.
+    One action counts the rows the graph has: the nodes plus both
+    directions of every distinct edge. Up to SMALL_GRAPH_ROWS of them,
+    the graph is solved in ONE task: a single-group ``applyInArrow``
+    union-find over the checkpointed rows, so the plan adds one exchange
+    and no per-round jobs. Distinct mention surfaces are vocabulary-bounded,
+    so the pipeline always takes this path.
+
+    Above it, min-label propagation runs as iterative DataFrame self-joins
+    with checkpointed frontiers (north rule), one job per round, with
+    pointer doubling for O(log diameter) rounds. Convergence = no label
+    changed (reference cycle-guard analog, assign_canonical_names.py:146-151).
     The per-iteration min() aggregate is partially (map-side) combined, so
     head-entity stars (one label feeding millions of neighbors) reduce
     before the shuffle — the skew defusal the north rule asks for; AQE
     skew-join handles the join side."""
-    # setup actions trimmed to ONE (r7): the edge count materializes the
-    # lazily-checkpointed symmetric edge table; the repartitioned copy and
-    # the initial labels stay lazy and materialize inside round 1's job
-    # instead of each paying a synchronous setup action (the serial
-    # per-action floor is what the scaling bench's low/high ratio sees).
+    node_type = nodes.schema[node_col].dataType
     sym = (
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
+    )
+    # node rows carry a null dst; the count materializes the checkpoint
+    # both paths read
+    graph = (
+        nodes.select(
+            F.col(node_col).alias("src"), F.lit(None).cast(node_type).alias("dst")
+        )
+        .unionByName(sym)
         .localCheckpoint(eager=False)
     )
-    n_edges = sym.count()
-    n_parts = max(1, min(n_edges // 500_000, 1024))
-    spark = nodes.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    sym = sym.repartition(n_parts, "dst").localCheckpoint(eager=False)
+    if graph.count() <= SMALL_GRAPH_ROWS:
+        # groupBy(F.lit(0)) fails inside Spark; group on a literal column.
+        # applyInArrow, not applyInPandas: pandas turns a bigint column
+        # holding a null into float64, which rounds ids above 2**53.
+        return (
+            graph.withColumn("_g", F.lit(0))
+            .groupBy("_g")
+            .applyInArrow(
+                _min_root_components,
+                StructType(
+                    [StructField("node", node_type), StructField("component", node_type)]
+                ),
+            )
+        )
 
+    sym = graph.where(F.col("dst").isNotNull())
     labels = (
-        nodes.select(F.col(node_col).alias("node"))
+        graph.where(F.col("dst").isNull())
+        .select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .repartition(n_parts, "node")
         .localCheckpoint(eager=False)
     )
-    converged = False
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        for _ in range(max_iter):
-            # step 1 — neighbor min: m(v) = min(label(v), labels of neighbors)
-            neighbor_labels = (
-                sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            stepped = labels.join(neighbor_labels, "node", "left").select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                F.col("component").alias("prev_component"),
-            )
-            # step 2 — pointer doubling: component(v) := component(component(v)).
-            # Neighbor-min alone moves labels one hop per round (O(diameter) —
-            # a 50-node chain would silently exhaust max_iter); the label-of-
-            # label jump doubles propagation distance per round => O(log n).
-            # Applied TWICE per round (r7): a second label-of-label join
-            # quadruples propagation distance per convergence check, so the
-            # loop needs roughly half the rounds — and each round's count()
-            # action is serial driver floor. Extra doubling at the fixpoint
-            # is a no-op, so the final labels are unchanged.
-            parent = stepped.select(
-                F.col("node").alias("component"), F.col("component").alias("grand")
-            )
-            doubled = stepped.join(parent, "component", "left").select(
-                "node",
-                F.least(F.coalesce("grand", "component"), F.col("component")).alias(
-                    "component"
-                ),
-                "prev_component",
-            )
-            parent2 = doubled.select(
-                F.col("node").alias("component"), F.col("component").alias("grand")
-            )
-            doubled = doubled.join(parent2, "component", "left").select(
-                "node",
-                F.least(F.coalesce("grand", "component"), F.col("component")).alias(
-                    "component"
-                ),
-                "prev_component",
-            )
-            # ONE job per iteration: the previous label rides through the
-            # frontier (no extra join against the old labels), and the lazy
-            # localCheckpoint materializes inside the convergence count.
-            # (Separate checkpoint + join-count jobs doubled the
-            # per-iteration driver floor — the serial cost the scaling
-            # bench actually measures.)
-            new_labels = doubled.localCheckpoint(eager=False)
-            # full count (no limit-1 short circuit): the count job must touch
-            # every partition so the lazy checkpoint fully materializes
-            # before the next iteration builds on it
-            changed = new_labels.where(
-                F.col("component") != F.col("prev_component")
-            ).count()
-            labels = new_labels.select("node", "component")
-            if changed == 0:
-                converged = True
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(graph diameter too large?) — raise max_iter; silent mislabeling "
-            "is not an option"
+    for _ in range(max_iter):
+        # step 1 — neighbor min: m(v) = min(label(v), labels of neighbors)
+        neighbor_labels = (
+            sym.join(labels.withColumnRenamed("node", "dst"), "dst")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("component").alias("nbr_component"))
         )
-    return labels
+        stepped = labels.join(neighbor_labels, "node", "left").select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("nbr_component", "component")
+            ).alias("component"),
+            F.col("component").alias("prev_component"),
+        )
+        # step 2 — pointer doubling: component(v) := component(component(v)).
+        # Neighbor-min alone moves labels one hop per round (O(diameter) —
+        # a 50-node chain would silently exhaust max_iter); the label-of-
+        # label jump doubles propagation distance per round => O(log n).
+        # Applied TWICE per round (r7): a second label-of-label join
+        # quadruples propagation distance per convergence check, so the
+        # loop needs roughly half the rounds — and each round's count()
+        # action is serial driver floor. Extra doubling at the fixpoint
+        # is a no-op, so the final labels are unchanged.
+        parent = stepped.select(
+            F.col("node").alias("component"), F.col("component").alias("grand")
+        )
+        doubled = stepped.join(parent, "component", "left").select(
+            "node",
+            F.least(F.coalesce("grand", "component"), F.col("component")).alias(
+                "component"
+            ),
+            "prev_component",
+        )
+        parent2 = doubled.select(
+            F.col("node").alias("component"), F.col("component").alias("grand")
+        )
+        doubled = doubled.join(parent2, "component", "left").select(
+            "node",
+            F.least(F.coalesce("grand", "component"), F.col("component")).alias(
+                "component"
+            ),
+            "prev_component",
+        )
+        # ONE job per iteration: the previous label rides through the
+        # frontier (no extra join against the old labels), and the lazy
+        # localCheckpoint materializes inside the convergence count.
+        # (Separate checkpoint + join-count jobs doubled the
+        # per-iteration driver floor — the serial cost the scaling
+        # bench actually measures.)
+        new_labels = doubled.localCheckpoint(eager=False)
+        # full count (no limit-1 short circuit): the count job must touch
+        # every partition so the lazy checkpoint fully materializes
+        # before the next iteration builds on it
+        changed = new_labels.where(
+            F.col("component") != F.col("prev_component")
+        ).count()
+        labels = new_labels.select("node", "component")
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} iterations "
+        "(graph diameter too large?) — raise max_iter; silent mislabeling "
+        "is not an option"
+    )
 
 
 def consensus_canonical(
@@ -364,11 +425,20 @@ def resolve_unlinked_surfaces(
         .groupBy("component", "entity_id")
         .count()
     )
-    w = Window.partitionBy("component").orderBy(F.desc("count"), F.asc("entity_id"))
+    # top-1 as min-of-struct, the same move as link and consensus: the
+    # order (count desc, entity_id asc) is min(struct(-count, entity_id)),
+    # and (component, entity_id) is unique per row, so there are no ties.
     comp_entity = (
-        ent_counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("component", F.col("entity_id").alias("comp_entity"))
+        ent_counts.groupBy("component")
+        .agg(
+            F.min(
+                F.struct(
+                    (-F.col("count")).alias("_neg_n"),
+                    F.col("entity_id").alias("comp_entity"),
+                )
+            ).alias("_m")
+        )
+        .select("component", F.col("_m.comp_entity").alias("comp_entity"))
     )
     return (
         linked.join(comp_entity, "component", "left")

@@ -2652,14 +2652,15 @@ def kg_pipeline_link_triples(spark, sf_dir):
 def kg_pipeline_components(spark, sf_dir):
     """Flagship CANONICALIZE-stage companion with a REAL oracle (closes
     round-4 verdict missing #2b): runs the pipeline's own
-    canonicalize.connected_components — pointer-doubled min-label
-    propagation, the exact code kg_pipeline_triples uses for same-as
-    clustering — on a graph DuckDB can independently solve by recursive
-    transitive closure: per gazetteer term, docs mentioning the term are
-    chained in doc_id order (path edges, so components have real
-    diameter — a clique fixture would never exercise the doubling), and
-    paths sharing a doc merge across terms. The oracle computes
-    min-reachable-id per node with WITH RECURSIVE.
+    canonicalize.connected_components on a graph DuckDB can independently
+    solve by recursive transitive closure: per gazetteer term, docs
+    mentioning the term are chained in doc_id order (path edges, so
+    components have real diameter), and paths sharing a doc merge across
+    terms. The oracle computes min-reachable-id per node with WITH
+    RECURSIVE. At the sf sizes this graph is below SMALL_GRAPH_ROWS, so
+    it takes the one-task union-find, the path the pipeline's surface
+    graph takes; the distributed pointer-doubling path is checked
+    against it in tests/test_canonicalize.py.
 
     The lag() path construction sorts each term's docs on one reducer —
     fine for an oracle fixture, NOT the scale path (the pipeline's real

@@ -461,20 +461,32 @@ def span_dedup(
 
     Returns (id_col, n_chunks, n_kept, text_deduped).
 
+    Precondition on `docs`: `id_col` is unique and every evaluation of
+    `docs` yields the same (id, text) rows. The plan reads `docs` in three
+    branches (the winner aggregate, the drop-set join and the map-side
+    rebuild) and matches them by (id, chunk_idx) only. In the final AQE
+    plan the winner and rebuild branches share one exchange of `docs`
+    (ReusedExchange), but the drop-set branch evaluates `docs` again: the
+    join's inferred isnotnull(id) filter pushes below an upstream
+    repartition and breaks the reuse. A `docs` built from rand(), an
+    unordered limit() or a non-deterministic UDF can therefore give the
+    branches different corpora and silently corrupt `text_deduped`;
+    checkpoint such an input first. tests/test_ops.py pins the plan shape.
+
     Scale shape (r7, guide §8 "decide with small rows, move big rows
     once" — here ZERO times): the exploded stream that shuffles carries
     only (id, chunk_idx, md5) — never the chunk text. The winner per
     chunk hash is a groupBy min-struct (partial aggregate combines
     map-side, so a billion-copy boilerplate chunk reduces before the
-    wire); the join back rides the same hashpartitioning (ReusedExchange)
-    and yields just the DROPPED (id, chunk_idx) positions — a set bounded
-    by the duplicate occurrences, tiny on real corpora. Reassembly then
-    happens MAP-SIDE on the un-shuffled base table: re-derive the chunks
-    (pure function of text) and filter out the dropped positions, so the
-    corpus text itself crosses the wire exactly zero times (the old form
-    shuffled the full text twice: once into the hash join, once back on
-    doc_id). The drop-set join broadcasts when small; a pathological
-    all-duplicates corpus degrades to ONE text-free shuffle of positions.
+    wire); the join back against the winners yields just the DROPPED
+    (id, chunk_idx) positions — a set bounded by the duplicate
+    occurrences, tiny on real corpora. Reassembly then happens MAP-SIDE
+    on the un-shuffled base table: re-derive the chunks (pure function of
+    text) and filter out the dropped positions, so the corpus text itself
+    crosses the wire exactly zero times (the old form shuffled the full
+    text twice: once into the hash join, once back on doc_id). The
+    drop-set join broadcasts when small; a pathological all-duplicates
+    corpus degrades to ONE text-free shuffle of positions.
     """
     # two-step split -> chunk (r7): inlined, the split() subtree was
     # re-evaluated for every transform element (see word_shingles_from)
@@ -491,12 +503,11 @@ def span_dedup(
         id_col,
         F.posexplode(chunk_arr).alias("chunk_idx", "chunk"),
     ).select(id_col, "chunk_idx", F.md5(F.col("chunk")).alias("_h"))
-    # two consumers (winner agg + join back) share one Exchange(_h):
-    # ReusedExchange computes the chunk build once. No localCheckpoint
-    # here — cutting the lineage would also cut the REBUILD branch off the
-    # shared corpus subtree and re-derive the (round-robin-spread) corpus
-    # a second time; with the plan intact, every branch reuses both the
-    # corpus exchange and the _h exchange (verified in the committed plan).
+    # No localCheckpoint here: cutting the lineage would also cut the
+    # REBUILD branch off the shared corpus subtree and re-derive the
+    # (round-robin-spread) corpus once more; with the plan intact the
+    # winner and rebuild branches reuse one corpus exchange (see the
+    # docstring's precondition for the branch that does not).
     winners = chunked.groupBy("_h").agg(
         F.min(F.struct(id_col, "chunk_idx")).alias("_first")
     )
@@ -555,10 +566,10 @@ def near_dup_clusters(
     /root/reference/scripts/assign_canonical_names_simple.py:118-151).
 
     Scale shape: pairs are the banded equi-join (minhash_lsh_pairs);
-    components are pointer-doubled min-label propagation, O(log diameter)
-    rounds — and near-dup graphs are almost all tiny cliques, so the
-    frontier empties after round 1; singletons ride through the left
-    anti pattern below as their own cluster."""
+    components come from canonicalize.connected_components: one task
+    while docs + symmetric pairs fit SMALL_GRAPH_ROWS, pointer-doubled
+    min-label propagation (O(log diameter) rounds) above; singletons
+    come out as their own cluster."""
     from pyspark.sql import Window
 
     from ..canonicalize import connected_components

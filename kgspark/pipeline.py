@@ -48,11 +48,13 @@ def run_pipeline(
     # localCheckpoint(eager=False). Under AQE that checkpoint is not lazy:
     # planning it runs every shuffle stage below it right away, so these
     # stages execute one after another while run_pipeline() builds the
-    # plan, before the caller's first action (41 of the 64 jobs of a
-    # 6k-page local[4] run on a 4-vCPU host, Spark 4.1.2). Single-consumer
-    # stages stay fully lazy so Catalyst fuses them into their consumer
-    # (fewer jobs — job-launch latency is the serial floor of the pipeline
-    # at small scale).
+    # plan, before the caller's first action (26 of the 44 jobs of the
+    # benchmark's traced wide_vocab run, seed 1, local[3] on a 4-vCPU
+    # host, Spark 4.1.2; 10 of the 26 are connected_components' one
+    # counting action, which also runs the SAME_AS edge plan below it).
+    # Single-consumer stages stay fully lazy so Catalyst fuses them into
+    # their consumer (fewer jobs — job-launch latency is the serial floor
+    # of the pipeline at small scale).
     _SHARED = {"annotated", "links", "surfaces", "surface_entity", "components"}
 
     def ck(name: str, make, partition_by=None) -> DataFrame:

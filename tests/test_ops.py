@@ -3,6 +3,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from kgspark.ops import dedup, multimodal, simsearch, textstats
@@ -561,6 +563,27 @@ def test_span_dedup_pinned(spark):
     assert rows[3]["n_kept"] == 1 and rows[3]["text_deduped"] == "x y"
     # within-doc repeat: first occurrence wins, second drops
     assert rows[4]["n_kept"] == 1 and rows[4]["text_deduped"] == "p q"
+
+
+def test_span_dedup_plan_shape_pinned(spark):
+    """span_dedup reads `docs` in three branches. Over a round-robin
+    spread corpus the final plan computes that exchange twice and reuses
+    it once (winner and rebuild branches share it; the drop-set branch's
+    pushed-down isnotnull filter keeps it apart). The docstring's
+    determinism precondition rests on this shape, so a drift must fail
+    here rather than change silently."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d"), (3, "c d x y"), (4, "p q p q")],
+        "doc_id long, text string",
+    ).repartition(4)
+    out = dedup.span_dedup(docs, chunk_tokens=2)
+    assert len(out.collect()) == 4
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    reused = re.findall(r"ReusedExchange \[[^\]]*\], Exchange RoundRobinPartitioning", final)
+    computed = re.findall(r"\+- Exchange RoundRobinPartitioning", final)
+    assert (len(computed), len(reused)) == (2, 1), final
 
 
 def test_span_dedup_ragged_tail_chunk(spark):
